@@ -9,6 +9,8 @@ results agree to the ULP.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -50,8 +52,13 @@ def cosine(a: Column, b: Column) -> Column:
 def dlit(x: float) -> str:
     """Exact double literal: repr() is the shortest round-tripping
     decimal, and Spark's parser reads it with correctly-rounded
-    Double.parseDouble — bit-identical to F.lit(x)."""
-    return repr(float(x)) + "D"
+    Double.parseDouble — bit-identical to F.lit(x). NaN and infinities
+    have no such literal (``nanD`` parses as a column name), so they
+    raise here instead of as an unresolved column inside Spark."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"dlit: non-finite value {x!r} has no SQL double literal")
+    return repr(x) + "D"
 
 
 def darr(xs) -> str:

@@ -1560,6 +1560,23 @@ def video_jaccard_pairs_incremental(
     )
 
 
+def set_fingerprint_counts(hashes: DataFrame, multiset: bool = False) -> DataFrame:
+    """``(sid, shash, c, n)`` rows of an ``(id, hash)`` fan-out: ``c``
+    is the hash's multiplicity within the id (1 everywhere unless
+    ``multiset``), ``n`` the id's total count, denormalized per row —
+    the stored index rows of every set-fingerprint sink."""
+    from pyspark.sql import Window
+
+    raw = hashes.toDF("sid", "shash")
+    if not multiset:
+        raw = raw.distinct()
+    return (
+        raw.groupBy("sid", "shash")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .withColumn("n", F.sum("c").over(Window.partitionBy("sid")))
+    )
+
+
 def set_fingerprint_pairs_incremental(
     corpus_counts: DataFrame | None,
     new_hashes: DataFrame,
@@ -1596,16 +1613,7 @@ def set_fingerprint_pairs_incremental(
 
     if metric not in ("jaccard", "containment"):
         raise ValueError(f"metric must be jaccard|containment, got {metric!r}")
-    from pyspark.sql import Window
-
-    raw = new_hashes.toDF("sid", "shash")
-    if not multiset:
-        raw = raw.distinct()
-    new_cnt = _persist(
-        raw.groupBy("sid", "shash")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .withColumn("n", F.sum("c").over(Window.partitionBy("sid")))
-    )
+    new_cnt = _persist(set_fingerprint_counts(new_hashes, multiset))
     if corpus_counts is None:
         all_cnt = new_cnt
     else:

@@ -25,6 +25,8 @@ nearest neighbor search", TPAMI 2011).
 
 from __future__ import annotations
 
+import numbers
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -1076,10 +1078,17 @@ def _in_longs(col_name: str, ids) -> F.Column:
     literal per id (measured 4.7 s across q167's three isin calls at
     ~260 ids each). Same Catalyst In(...) predicate, so pushdown /
     partition pruning behave identically. Empty list → false, matching
-    ``isin([])``."""
+    ``isin([])``. A None or non-integral id raises: ``int(3.7)`` would
+    silently probe id 3."""
     if not ids:
         return F.lit(False)
-    return F.expr(f"`{col_name}` IN ({', '.join(str(int(i)) for i in ids)})")
+    return F.expr(f"`{col_name}` IN ({', '.join(str(_as_long(i)) for i in ids)})")
+
+
+def _as_long(i) -> int:
+    if not isinstance(i, numbers.Integral):
+        raise ValueError(f"_in_longs: id {i!r} is not an integer")
+    return int(i)
 
 
 def _query_probe_frame(

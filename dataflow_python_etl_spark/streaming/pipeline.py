@@ -16,6 +16,12 @@ Scale notes: state for the windowed agg is bounded by the watermark
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -137,6 +143,53 @@ def run_to_memory_sink(stream_df: DataFrame, name: str) -> None:
     q.stop()
 
 
+def _start(
+    stream_df: DataFrame, apply_batch, checkpoint: str, output_mode: str = "append"
+) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
+    """Start ``apply_batch`` as the ``foreachBatch`` sink of every
+    ``stream_*`` here. foreachBatch is AT-LEAST-once through the
+    checkpoint — a restart replays the last uncommitted batch — so every
+    write a sink makes is per-key idempotent or a partition overwrite."""
+    return (
+        stream_df.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
+        .start()
+    )
+
+
+def _overwrite_partitions(
+    df: DataFrame, path: str, *cols: str, batch_id: int | None = None
+) -> None:
+    """The per-batch write: DYNAMIC partition overwrite of ``cols``
+    (then ``ingest_batch=<batch_id>`` when given), so a replayed batch
+    rewrites exactly its own partitions instead of duplicating them."""
+    if batch_id is not None:
+        df, cols = df.withColumn("ingest_batch", F.lit(batch_id)), (*cols, "ingest_batch")
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+        .parquet(path)
+    )
+
+
+def _read_json(path: str):
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def _write_json_atomic(path: str, obj) -> None:
+    """tmp + ``os.replace``: a reader sees the old or the new file,
+    never a torn one."""
+    tmp = path + ".__tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 def stream_upsert_to_table(
     stream_df: DataFrame,
     table_path: str,
@@ -154,8 +207,6 @@ def stream_upsert_to_table(
     from dataflow_python_etl_spark.operators.upsert import upsert_table
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         spark = batch_df.sparkSession
         deduped = batch_df.dropDuplicates(key_cols)
         _guard_missing_table(table_path, batch_id)
@@ -164,12 +215,7 @@ def stream_upsert_to_table(
         else:
             upsert_table(spark, table_path, deduped, key_cols)
 
-    return (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
+    return _start(stream_df, apply_batch, checkpoint, "update")
 
 
 def _guard_missing_table(table_path: str, batch_id: int) -> None:
@@ -182,8 +228,6 @@ def _guard_missing_table(table_path: str, batch_id: int) -> None:
     backup when one exists; if none does but the checkpoint says we've
     applied batches before (batch_id > 0), fail loudly rather than
     resurrect the table from one batch."""
-    import os
-
     from dataflow_python_etl_spark.operators.upsert import recover_table_dir
 
     if os.path.exists(table_path):
@@ -234,8 +278,6 @@ def stream_cdc_to_table(
     ``NotImplementedError`` per batch when delta-spark is absent
     (loud, never a silent parquet fallback).
     """
-    from pyspark.sql import functions as F
-
     from dataflow_python_etl_spark.operators.upsert import (
         merge_df,
         merge_table_transactional,
@@ -264,8 +306,6 @@ def stream_cdc_to_table(
         )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         spark = batch_df.sparkSession
         data_cols = [c for c in batch_df.columns if c != op_col]
         if engine == "delta":
@@ -297,12 +337,7 @@ def stream_cdc_to_table(
         merged = merge_df(existing, batch_df, key_cols, **_clauses(data_cols))
         write_and_swap(merged, table_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
+    return _start(stream_df, apply_batch, checkpoint, "update")
 
 
 def _guard_replay(
@@ -327,6 +362,218 @@ def _guard_replay(
             return batch.where(F.col(id_col) > F.lit(wm["max_id"]))
         return batch
     return batch.join(corpus, id_col, "left_anti")
+
+
+def _watermark_path(base: str) -> str:
+    return base + ".__ingest_watermark"
+
+
+def _write_watermark(wm_path: str, batch_id: int, max_id) -> None:
+    # atomic: a torn watermark would silently re-admit (or worse,
+    # permanently skip) ids on the next restart
+    _write_json_atomic(wm_path, {"batch_id": batch_id, "max_id": max_id})
+
+
+def _decided_max_id(
+    batch: DataFrame, id_col: str, wm: dict | None, wm_path: str, batch_id: int
+):
+    """Highest id this batch DECIDED (survivor or dup — a dropped dup
+    is a decision too; re-admitting it later would flip it). None when
+    the watermark already covers every id (source-level replay): the
+    batch is then recorded as done and nothing else is touched. An
+    empty FIRST batch has no watermark to carry forward, so it writes
+    none rather than invent one."""
+    max_id = batch.agg(F.max(id_col)).first()[0]
+    if max_id is None and wm is not None:
+        _write_watermark(wm_path, batch_id, wm["max_id"])
+    return max_id
+
+
+def _survivors(
+    candidates: DataFrame, pairs: DataFrame, id_col: str, probed: bool
+) -> DataFrame:
+    """The survivor rule every ingest sink shares. A candidate is
+    dropped when it pairs with anything already decided: an ingested
+    item (either side of the ``(doc_a, doc_b)`` pair — the corpus is
+    immutable, its members are never removed) or a lower-id candidate
+    (doc_b of a new-new pair). Before anything was ingested
+    (``probed`` False) every pair is new-new and the rule is "drop
+    doc_b". Materialized, so the index and corpus writes see one
+    consistent survivor set (and the probe's caches can be freed)."""
+    if probed:
+        new_ids = candidates.select(F.col(id_col).alias("__nid"))
+        b_new = pairs.join(
+            new_ids, pairs["doc_b"] == F.col("__nid"), "left_semi"
+        ).select(F.col("doc_b").alias(id_col))
+        a_new_b_corpus = (
+            pairs.join(new_ids, pairs["doc_b"] == F.col("__nid"), "left_anti")
+            .join(new_ids, pairs["doc_a"] == F.col("__nid"), "left_semi")
+            .select(F.col("doc_a").alias(id_col))
+        )
+        removals = b_new.union(a_new_b_corpus).distinct()
+    else:
+        removals = pairs.select(F.col("doc_b").alias(id_col)).distinct()
+    return candidates.join(removals, id_col, "left_anti").localCheckpoint(eager=True)
+
+
+def _set_pairs(
+    index: DataFrame | None,
+    hashes: DataFrame,
+    metric: str,
+    min_score_ppm: int,
+    multiset: bool,
+) -> DataFrame:
+    """``(doc_a, doc_b)`` pairs of a set-fingerprint probe
+    (``multimodal.set_fingerprint_pairs_incremental``)."""
+    from dataflow_python_etl_spark.operators.multimodal import (
+        set_fingerprint_pairs_incremental,
+    )
+
+    return set_fingerprint_pairs_incremental(
+        index, hashes, metric=metric, min_score_ppm=min_score_ppm, multiset=multiset
+    ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+
+
+class _ParquetIndex:
+    """A near-dup sink's index as plain parquet at ``path`` — the
+    default store; same surface as ``dedup.BandIndexStore``."""
+
+    def __init__(self, spark: SparkSession, path: str) -> None:
+        self.spark, self.path = spark, path
+
+    def exists(self) -> bool:
+        return os.path.exists(self.path)
+
+    def read(self) -> DataFrame:
+        return self.spark.read.parquet(self.path)
+
+    def append(self, rows: DataFrame) -> None:
+        rows.write.mode("append").parquet(self.path)
+
+    def drop(self) -> None:
+        shutil.rmtree(self.path, ignore_errors=True)
+
+
+def _near_dup_ingest(
+    stream: DataFrame,
+    corpus_path: str,
+    index_path: str,
+    checkpoint: str,
+    *,
+    sink: str,
+    id_col: str,
+    payload_col: str,
+    replay_guard: str,
+    fingerprint,
+    probe,
+    index_rows,
+    gate=None,
+    index_store=None,
+) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
+    """The one skeleton behind every online near-dup ingest sink: each
+    micro-batch of ``(id_col, payload_col)`` rows is deduped against
+    the ALREADY-INGESTED corpus (via a persisted index) and against
+    itself, and only survivors are appended. Three plug-ins make a
+    sink:
+
+    - ``fingerprint(docs)``: the batch's fingerprint frame, computed
+      once (the plug-in caches it when it has two consumers);
+    - ``probe(batch, fp, corpus, index)``: ``(doc_a, doc_b)`` pairs
+      against the index, or within the batch alone when ``corpus``
+      and ``index`` are None (nothing ingested yet);
+    - ``index_rows(docs, fp)``: the index rows to store for ``docs``'
+      ids (the survivors; the whole corpus when a lost index is
+      rebuilt, with ``fp = fingerprint(corpus)``).
+
+    ``gate(batch)`` optionally filters the batch before the replay
+    guard; ``index_store(spark)`` swaps the plain-parquet index for a
+    store with the same surface (``dedup.BandIndexStore``).
+
+    Crash-safety contract (foreachBatch is AT-LEAST-once; every write
+    here is per-key idempotent or partition-overwritten — never an
+    additive fold):
+
+    - A restart whose corpus vanished while an ingest artifact (index
+      or watermark) survives FAILS instead of silently rebuilding the
+      corpus from one batch (every prior survivor would be lost AND
+      replayed ids would re-enter as "new"). batch_id alone is no
+      evidence of prior ingestion — an empty batch 0 writes nothing —
+      and the index is appended before the corpus, so any ingest
+      leaves an artifact.
+    - A lost index is rebuilt FROM the corpus and PERSISTED before use:
+      an in-plan rebuild used once would leave the index holding only
+      this batch's rows, silently blinding every later batch to every
+      pre-loss corpus doc (the poisoned-index failure mode).
+    - Replay guard: ``anti_join`` drops ids already in the corpus;
+      ``watermark`` (monotone ids) is a pure filter ``id > max_id``
+      against a tiny atomically-replaced watermark file, corpus
+      appends become dynamic partition OVERWRITES of ``ingest_batch=
+      <id>`` (a crash-replayed batch rewrites its own partition), and a
+      replay arriving after the watermark committed (batch_id ==
+      recorded) is a pure no-op.
+    - Order: index first, then corpus, then (watermark mode) the
+      watermark. A crash between the index and corpus appends
+      re-processes the batch; its duplicate index rows only re-propose
+      the same candidate pairs, which every probe absorbs. A crash
+      between the corpus append and the watermark write replays the
+      batch against a corpus already holding it: identity pairs are
+      excluded and the probes de-duplicate ids, so the replay
+      converges to the identical survivor set and the partition
+      overwrite is idempotent.
+
+    Gates and probes must be deterministic so replays re-decide the
+    same way. Ids must be unique across the stream's lifetime."""
+    from dataflow_python_etl_spark.operators.dedup import unpersist_all
+
+    if replay_guard not in ("anti_join", "watermark"):
+        raise ValueError(f"replay_guard must be anti_join|watermark, got {replay_guard!r}")
+    wm_path = _watermark_path(corpus_path)
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        store = index_store(spark) if index_store else _ParquetIndex(spark, index_path)
+        batch = batch_df.select(id_col, payload_col)
+        if (
+            not os.path.exists(corpus_path)
+            and batch_id > 0
+            and (store.exists() or os.path.exists(wm_path))
+        ):
+            raise RuntimeError(
+                f"{sink} restart at batch {batch_id} but corpus {corpus_path} "
+                "is missing — refusing to rebuild from a single batch; restore "
+                "the corpus or start a fresh checkpoint."
+            )
+        wm = _read_json(wm_path) if replay_guard == "watermark" else None
+        if wm is not None and batch_id == wm["batch_id"]:
+            return  # this exact batch fully committed — replay is a no-op
+        if gate is not None:
+            batch = gate(batch)
+        corpus = index = None
+        if os.path.exists(corpus_path):
+            corpus = spark.read.parquet(corpus_path).select(id_col, payload_col)
+            batch = _guard_replay(batch, corpus, id_col, replay_guard, wm)
+            if not store.exists():
+                store.drop()  # a stale catalog row / partial dir
+                store.append(index_rows(corpus, fingerprint(corpus)))
+            index = store.read()
+        fp = fingerprint(batch)
+        pairs = probe(batch, fp, corpus, index)
+        max_id = None
+        if replay_guard == "watermark":
+            max_id = _decided_max_id(batch, id_col, wm, wm_path, batch_id)
+            if max_id is None:
+                unpersist_all()  # probe caches registered before the filter emptied
+                return
+        survivors = _survivors(batch, pairs, id_col, probed=index is not None)
+        store.append(index_rows(survivors, fp))
+        if replay_guard == "watermark":
+            _overwrite_partitions(survivors, corpus_path, batch_id=batch_id)
+            _write_watermark(wm_path, batch_id, max_id)
+        else:
+            survivors.write.mode("append").parquet(corpus_path)
+        unpersist_all()
+
+    return _start(stream, apply_batch, checkpoint)
 
 
 def stream_dedup_ingest(
@@ -356,7 +603,9 @@ def stream_dedup_ingest(
     documents is deduped against the ALREADY-INGESTED corpus (and
     itself) via the persisted MinHash band index, and only survivors
     are appended — the streaming composition of
-    :func:`~dataflow_python_etl_spark.operators.dedup.minhash_lsh_pairs_incremental`.
+    :func:`~dataflow_python_etl_spark.operators.dedup.minhash_lsh_pairs_incremental`
+    on the :func:`_near_dup_ingest` skeleton, which owns the survivor
+    rule and the whole crash-safety contract.
 
     The EXPENSIVE work per batch scales with the BATCH: signatures
     are computed for batch docs only, and verification re-shingles
@@ -372,70 +621,47 @@ def stream_dedup_ingest(
       (plan-pinned in tests/test_band_index.py). ``index_path``
       becomes the external table's file location.
     - ``replay_guard="watermark"``: for MONOTONE doc ids, replace the
-      corpus-sized replay anti-join with a pure filter
-      ``id > max_ingested_id`` against a tiny atomically-swapped
-      watermark file — no corpus scan at all in the guard
-      (plan-pinned). Corpus appends go to a per-batch hive partition
-      (``ingest_batch=<id>``) written with dynamic partition
-      OVERWRITE, so a crash-replayed batch rewrites its own partition
-      instead of appending duplicates; a replay arriving after the
-      watermark committed (batch_id == recorded) is a pure no-op.
+      corpus-sized replay anti-join with a pure filter against the
+      watermark (plan-pinned: no corpus scan in the guard).
 
-    Survivor rule matches the batch operators: a batch doc is dropped
-    if it near-dups any ingested corpus doc, or an earlier (lower-id)
-    doc in its own batch. ``decontaminate_against`` additionally drops
-    any batch doc sharing ≥ ``decontaminate_min_overlap`` n-gram
-    shingles with the supplied benchmark set BEFORE signing (the
-    streaming twin of ``curate_corpus(decontaminate_against=…)``):
-    the eval gram set is checkpointed once at stream build and each
-    batch broadcast-joins it, so the gate's per-batch cost scales
-    with the batch. ``dsir_weights`` (a frozen
-    ``lm.dsir_weight_table`` frame) adds an online TARGET-LIKENESS
-    gate: batch docs whose PER-GRAM MEAN ``lm.dsir_score_with`` score
-    is under ``min_dsir_ppm`` are dropped before signing (integer
-    cross-multiply — the raw score is a length-scaled sum; default
-    threshold 1_000_000 = mean ratio 1: keep docs whose hashed-n-gram
-    profile is net target-like). Docs with no tokens — NULL, empty,
-    or whitespace-only text (``_gram_buckets`` drops zero-length
-    tokens, so the '' split artifact never reaches the ''-gram
-    bucket; ADVICE r8) — produce no score and are DROPPED by this
-    gate (a quality gate requires evidence; "no evidence, no
-    ingest"). ``classifier_weights`` (a frozen
-    ``classifier.quality_classifier_fit`` table) adds the TRAINED
-    quality gate — the streaming twin of
+    ``decontaminate_against`` drops any batch doc sharing ≥
+    ``decontaminate_min_overlap`` n-gram shingles with the supplied
+    benchmark set BEFORE signing (the streaming twin of
+    ``curate_corpus(decontaminate_against=…)``): the eval gram set is
+    checkpointed once at stream build and each batch broadcast-joins
+    it, so the gate's per-batch cost scales with the batch.
+    ``dsir_weights`` (a frozen ``lm.dsir_weight_table`` frame) adds an
+    online TARGET-LIKENESS gate: batch docs whose PER-GRAM MEAN
+    ``lm.dsir_score_with`` score is under ``min_dsir_ppm`` are dropped
+    before signing (integer cross-multiply — the raw score is a
+    length-scaled sum; default threshold 1_000_000 = mean ratio 1:
+    keep docs whose hashed-n-gram profile is net target-like). Docs
+    with no tokens — NULL, empty, or whitespace-only text
+    (``_gram_buckets`` drops zero-length tokens, so the '' split
+    artifact never reaches the ''-gram bucket; ADVICE r8) — produce no
+    score and are DROPPED by this gate (a quality gate requires
+    evidence; "no evidence, no ingest"). ``classifier_weights`` (a
+    frozen ``classifier.quality_classifier_fit`` table) adds the
+    TRAINED quality gate — the streaming twin of
     ``curate_corpus(classifier_weights=…)``: batch docs are kept iff
     their hashed-linear ``margin > classifier_min_margin``, gramless
     docs dropped on the same no-evidence rule. All three gates are
-    deterministic, so crash replays re-drop the same docs. Crash safety (both guards): the index is
-    appended FIRST, then the corpus, then (watermark mode) the
-    watermark. A crash between index and corpus appends re-processes
-    the doc — duplicate index rows re-propose the same candidate
-    pair, which is harmless because candidates are aggregated per
-    pair in the posting-list join (``_posting_common``'s pair
-    groupBy) and every downstream consumer reaches the corpus via
-    semi-joins, which are idempotent under duplicate probe rows (no
-    bare ``distinct`` is needed, and since round 4 none exists on
-    this path). A crash between
-    corpus append and watermark write replays the batch against a
-    corpus that already contains it: the verification de-duplicates
-    ids (see ``_verify_jaccard(dedup_ids=True)``), identity pairs are
-    excluded, so the replay converges to the identical survivor set
-    and the partition overwrite is idempotent. Ids must be unique
-    across the stream's lifetime.
-    """
-    import json
-    import os
+    deterministic, so crash replays re-drop the same docs.
 
+    Replay convergence on this probe: duplicate index rows are
+    harmless because candidates are aggregated per pair in the
+    posting-list join (``_posting_common``'s pair groupBy) and every
+    downstream consumer reaches the corpus via semi-joins; a batch
+    replayed against a corpus already holding it is de-duplicated by
+    ``_verify_jaccard(dedup_ids=True)``.
+    """
     from dataflow_python_etl_spark.operators.dedup import (
         BandIndexStore,
         _band_frame,
+        minhash_lsh_pairs,
         minhash_lsh_pairs_incremental,
         minhash_signatures,
-        unpersist_all,
     )
-
-    if replay_guard not in ("anti_join", "watermark"):
-        raise ValueError(f"replay_guard must be anti_join|watermark, got {replay_guard!r}")
 
     # Streaming decontamination gate: the eval set's distinct gram set
     # is materialized ONCE at stream build (localCheckpoint — a plain
@@ -466,93 +692,12 @@ def stream_dedup_ingest(
     if classifier_weights is not None:
         frozen_clf = classifier_weights.localCheckpoint(eager=True)
 
-    wm_path = corpus_path + ".__ingest_watermark"
-
-    def _read_wm() -> dict | None:
-        if not os.path.exists(wm_path):
-            return None
-        with open(wm_path) as f:
-            return json.load(f)
-
-    def _write_wm(batch_id: int, max_id) -> None:
-        # tmp + atomic rename: a torn watermark would silently re-admit
-        # (or worse, permanently skip) ids on the next restart
-        tmp = wm_path + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "max_id": max_id}, f)
-        os.replace(tmp, wm_path)
-
-    def _store(spark: SparkSession) -> BandIndexStore | None:
-        if index_table is None:
-            return None
-        return BandIndexStore(spark, index_table, path=index_path, n_buckets=index_buckets)
-
-    def _index_exists(spark: SparkSession) -> bool:
-        st = _store(spark)
-        return st.exists() if st is not None else os.path.exists(index_path)
-
-    def _index_read(spark: SparkSession) -> DataFrame:
-        st = _store(spark)
-        return st.read() if st is not None else spark.read.parquet(index_path)
-
-    def _index_append(spark: SparkSession, bands: DataFrame) -> None:
-        st = _store(spark)
-        if st is not None:
-            st.append(bands)
-        else:
-            bands.write.mode("append").parquet(index_path)
-
-    def _index_rebuild(spark: SparkSession, bands: DataFrame) -> None:
-        st = _store(spark)
-        if st is not None:
-            st.drop()  # clear a stale catalog row / partial dir first
-            st.append(bands)
-        else:
-            bands.write.parquet(index_path)
-
-    def _corpus_append(survivors: DataFrame, batch_id: int) -> None:
-        if replay_guard == "watermark":
-            (
-                survivors.withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(corpus_path)
-            )
-        else:
-            survivors.write.mode("append").parquet(corpus_path)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, text_col)
-        if (
-            not os.path.exists(corpus_path)
-            and batch_id > 0
-            and (_index_exists(spark) or os.path.exists(wm_path))
-        ):
-            # same failure class as _guard_missing_table: a restarted
-            # sink whose corpus vanished must not silently rebuild the
-            # corpus from one batch (every prior survivor would be
-            # lost AND replayed ids would re-enter as "new").
-            # batch_id alone is NOT evidence of prior ingestion — an
-            # empty batch 0 writes nothing — so require a ingest
-            # artifact (index or watermark; the index is appended
-            # BEFORE the corpus, so any ingest leaves one).
-            raise RuntimeError(
-                f"stream_dedup_ingest restart at batch {batch_id} but corpus "
-                f"{corpus_path} is missing — refusing to rebuild from a "
-                "single batch; restore the corpus or start a fresh checkpoint."
-            )
-        wm = _read_wm() if replay_guard == "watermark" else None
-        if wm is not None and batch_id == wm["batch_id"]:
-            return  # this exact batch fully committed — replay is a no-op
+    def gate(batch: DataFrame) -> DataFrame:
         if eval_grams is not None:
             # same candidate shape as dedup.contamination_check, minus
             # the size scan (min_overlap thresholds the raw hit count):
             # a contaminated doc is dropped BEFORE signing, so it never
-            # enters the index or corpus — deterministic, so crash
-            # replays re-drop it and the convergence argument above is
-            # untouched
+            # enters the index or corpus
             from dataflow_python_etl_spark.operators.dedup import _doc_shingles
 
             hits = (
@@ -567,9 +712,7 @@ def stream_dedup_ingest(
         if frozen_weights is not None:
             # online DSIR target-likeness gate: semi-join on the ids
             # whose frozen-weight score clears the threshold — docs
-            # with no tokens have no score row and are dropped (a
-            # quality gate requires evidence). Deterministic, so
-            # crash replays re-drop the same docs.
+            # with no tokens have no score row and are dropped
             from dataflow_python_etl_spark.operators.lm import dsir_score_with
 
             passing = dsir_score_with(
@@ -583,11 +726,9 @@ def stream_dedup_ingest(
             )
             batch = batch.join(passing.select(id_col), id_col, "left_semi")
         if frozen_clf is not None:
-            # online TRAINED quality gate: frozen hashed-linear
-            # weights (classifier.quality_classifier_fit), keep iff
-            # margin > classifier_min_margin. Gramless docs have no
-            # score row and are dropped (no evidence, no ingest).
-            # Deterministic — crash replays re-drop the same docs.
+            # online TRAINED quality gate: keep iff margin >
+            # classifier_min_margin; gramless docs have no score row
+            # and are dropped (no evidence, no ingest)
             from dataflow_python_etl_spark.operators.classifier import (
                 quality_classifier_score_with,
             )
@@ -600,85 +741,45 @@ def stream_dedup_ingest(
                 buckets=classifier_buckets,
             ).where(F.col("margin") > classifier_min_margin)
             batch = batch.join(keep_clf.select(id_col), id_col, "left_semi")
-        if os.path.exists(corpus_path):
-            corpus = spark.read.parquet(corpus_path).select(id_col, text_col)
-            batch = _guard_replay(batch, corpus, id_col, replay_guard, wm)
-            if not _index_exists(spark):
-                # rebuild the FULL corpus index and PERSIST it before
-                # use: an in-plan rebuild used once and not written
-                # would leave the index holding only this batch's
-                # bands, silently blinding every later batch to every
-                # pre-loss corpus doc (poisoned-index failure mode)
-                _index_rebuild(
-                    spark,
-                    _band_frame(
-                        minhash_signatures(corpus, id_col, text_col, n, num_perm),
-                        id_col,
-                        num_perm,
-                        rows_per_band,
-                    ),
-                )
-            index = _index_read(spark)
-            pairs = minhash_lsh_pairs_incremental(
-                corpus, batch, index, id_col, text_col, n, num_perm, rows_per_band, threshold
-            )
-            # a new doc is removed when it pairs with ANYTHING already
-            # decided: a corpus doc (either side of the pair — the
-            # corpus is immutable) or a lower-id doc of its own batch
-            # (doc_b of a new-new pair). Corpus-side pair members are
-            # never removed.
-            new_ids = batch.select(F.col(id_col).alias("__nid"))
-            b_new = pairs.join(
-                new_ids, pairs["doc_b"] == F.col("__nid"), "left_semi"
-            ).select(F.col("doc_b").alias(id_col))
-            a_new_b_corpus = (
-                pairs.join(new_ids, pairs["doc_b"] == F.col("__nid"), "left_anti")
-                .join(new_ids, pairs["doc_a"] == F.col("__nid"), "left_semi")
-                .select(F.col("doc_a").alias(id_col))
-            )
-            removals = b_new.union(a_new_b_corpus).distinct()
-        else:
-            corpus = None
-            from dataflow_python_etl_spark.operators.dedup import minhash_lsh_pairs
+        return batch
 
-            pairs = minhash_lsh_pairs(
+    def probe(batch, _fp, corpus, index) -> DataFrame:
+        if index is None:
+            return minhash_lsh_pairs(
                 batch, id_col, text_col, n, num_perm, rows_per_band, threshold
             )
-            removals = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-        max_ingested = None
-        if replay_guard == "watermark":
-            # highest id this batch DECIDED (survivor or dup — a dropped
-            # dup is a decision too; re-admitting it later would flip it)
-            max_ingested = batch.agg(F.max(id_col)).first()[0]
-            if max_ingested is None:
-                # every id already covered by the watermark (source-level
-                # replay): record completion, touch nothing else. An
-                # empty FIRST batch (wm is None) has no watermark to
-                # carry forward — skip the write rather than invent one.
-                if wm is not None:
-                    _write_wm(batch_id, wm["max_id"])
-                unpersist_all()  # LSH caches registered before the filter emptied
-                return
-        # materialize before the appends so both writes see one
-        # consistent survivor set (and the LSH caches can be freed)
-        survivors = batch.join(removals, id_col, "left_anti").localCheckpoint(eager=True)
-        bands = _band_frame(
-            minhash_signatures(survivors, id_col, text_col, n, num_perm),
+        return minhash_lsh_pairs_incremental(
+            corpus, batch, index, id_col, text_col, n, num_perm, rows_per_band, threshold
+        )
+
+    def index_rows(docs: DataFrame, _fp) -> DataFrame:
+        # MinHash signs inside the probe, so the "fingerprint" is the
+        # documents themselves and the band rows re-sign ``docs`` (the
+        # materialized survivors, not the batch's lazy plan)
+        return _band_frame(
+            minhash_signatures(docs, id_col, text_col, n, num_perm),
             id_col,
             num_perm,
             rows_per_band,
         )
-        _index_append(spark, bands)
-        _corpus_append(survivors, batch_id)
-        if replay_guard == "watermark":
-            _write_wm(batch_id, max_ingested)
-        unpersist_all()
 
-    return (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    def bucketed_store(spark: SparkSession) -> BandIndexStore:
+        return BandIndexStore(spark, index_table, path=index_path, n_buckets=index_buckets)
+
+    return _near_dup_ingest(
+        stream_docs,
+        corpus_path,
+        index_path,
+        checkpoint,
+        sink="stream_dedup_ingest",
+        id_col=id_col,
+        payload_col=text_col,
+        replay_guard=replay_guard,
+        fingerprint=lambda docs: docs,
+        probe=probe,
+        index_rows=index_rows,
+        gate=gate,
+        index_store=bucketed_store if index_table is not None else None,
     )
 
 
@@ -699,33 +800,20 @@ def stream_image_dedup_ingest(
     ``multimodal.image_phash``), Hamming-matched against the
     ALREADY-INGESTED corpus via the persisted fingerprint index (and
     against itself), and only survivors are appended — the streaming
-    composition of ``multimodal.image_near_dup_pairs``, mirroring what
-    :func:`stream_dedup_ingest` is to MinHash text dedup (VERDICT r7
-    gap 3: a live crawl could dedup text online but not images).
+    composition of ``multimodal.image_near_dup_pairs`` on the
+    :func:`_near_dup_ingest` skeleton (survivor rule and crash-safety
+    contract live there), mirroring what :func:`stream_dedup_ingest`
+    is to MinHash text dedup (VERDICT r7 gap 3: a live crawl could
+    dedup text online but not images).
 
     The EXPENSIVE work per batch scales with the BATCH: only batch
     payloads are decoded, and the probe
     (``dedup.hamming_banded_pairs_incremental``) explodes only batch
     bands against the index's 16-byte ``(id, phash)`` rows — the
-    corpus's binary payloads are never re-read on the ingest path.
-    Survivor rule matches the text sink: a batch image is dropped if
-    it near-dups any ingested image, or a lower-id image of its own
-    batch.
-
-    Crash safety mirrors :func:`stream_dedup_ingest` exactly (same
-    guard functions): a restart whose corpus vanished but whose index/
-    watermark artifacts survive FAILS instead of silently rebuilding
-    from one batch; a lost index is rebuilt FROM the corpus (one
-    re-decode) and persisted before use, never probed partial; the
-    index is appended before the corpus, so a crash between the two
-    re-proposes candidates that the probe's ``distinct`` and the
-    anti-join replay guard absorb; ``replay_guard="watermark"``
-    (monotone ids) replaces the corpus-sized anti-join with a pure
-    filter and makes corpus appends per-batch dynamic partition
-    OVERWRITES, so a replayed batch rewrites its own partition.
-    foreachBatch is AT-LEAST-once: every write here is per-key
-    idempotent or partition-overwritten — never an additive fold
-    (CLAUDE.md round-6 rule).
+    corpus's binary payloads are never re-read on the ingest path
+    (only a lost index is rebuilt from them, one re-decode). The
+    probe's ``distinct`` absorbs the duplicate index rows a crash
+    between the index and corpus appends leaves.
 
     ``fingerprint_fn`` swaps the perceptual kernel: any
     ``(df, id_col, payload_col) -> (id, phash)`` fingerprinter — pass
@@ -733,125 +821,36 @@ def stream_image_dedup_ingest(
     sink (the fingerprint frame's first column is renamed to
     ``id_col`` positionally, so the kernels' differing default id
     names don't matter). Default: ``multimodal.image_phash``."""
-    import json
-    import os
-
     from dataflow_python_etl_spark.operators.dedup import (
         _persist,
         hamming_banded_pairs_incremental,
-        unpersist_all,
     )
     from dataflow_python_etl_spark.operators.multimodal import image_phash
 
     if fingerprint_fn is None:
         fingerprint_fn = image_phash
 
-    if replay_guard not in ("anti_join", "watermark"):
-        raise ValueError(
-            f"replay_guard must be anti_join|watermark, got {replay_guard!r}"
-        )
+    def fingerprint(docs: DataFrame) -> DataFrame:
+        return _persist(fingerprint_fn(docs, id_col, payload_col).toDF(id_col, "phash"))
 
-    wm_path = corpus_path + ".__ingest_watermark"
-
-    def _read_wm() -> dict | None:
-        if not os.path.exists(wm_path):
-            return None
-        with open(wm_path) as f:
-            return json.load(f)
-
-    def _write_wm(batch_id: int, max_id) -> None:
-        tmp = wm_path + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "max_id": max_id}, f)
-        os.replace(tmp, wm_path)
-
-    def _corpus_append(survivors: DataFrame, batch_id: int) -> None:
-        if replay_guard == "watermark":
-            (
-                survivors.withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(corpus_path)
-            )
-        else:
-            survivors.write.mode("append").parquet(corpus_path)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, payload_col)
-        if (
-            not os.path.exists(corpus_path)
-            and batch_id > 0
-            and (os.path.exists(index_path) or os.path.exists(wm_path))
-        ):
-            raise RuntimeError(
-                f"stream_image_dedup_ingest restart at batch {batch_id} but "
-                f"corpus {corpus_path} is missing — refusing to rebuild from "
-                "a single batch; restore the corpus or start a fresh "
-                "checkpoint."
-            )
-        wm = _read_wm() if replay_guard == "watermark" else None
-        if wm is not None and batch_id == wm["batch_id"]:
-            return  # this exact batch fully committed — replay is a no-op
-        index_sig = None
-        if os.path.exists(corpus_path):
-            corpus = spark.read.parquet(corpus_path)
-            batch = _guard_replay(batch, corpus, id_col, replay_guard, wm)
-            if not os.path.exists(index_path):
-                # rebuild the FULL corpus fingerprint index and PERSIST
-                # it before use — a partial index silently blinds every
-                # later batch (the poisoned-index failure mode)
-                fingerprint_fn(
-                    corpus.select(id_col, payload_col), id_col, payload_col
-                ).toDF(id_col, "phash").write.parquet(index_path)
-            index_sig = spark.read.parquet(index_path)
-        sig = _persist(
-            fingerprint_fn(batch, id_col, payload_col).toDF(id_col, "phash")
-        )
-        pairs = hamming_banded_pairs_incremental(
-            index_sig, sig, id_col, "phash", max_hamming, n_bands,
+    def probe(_batch, sig, _corpus, index) -> DataFrame:
+        return hamming_banded_pairs_incremental(
+            index, sig, id_col, "phash", max_hamming, n_bands,
             combine=2 if max_hamming <= n_bands - 2 else 1,
         )
-        # a new image is removed when it pairs with anything already
-        # decided: an ingested image (either side of the pair) or a
-        # lower-id image of its own batch (doc_b of a new-new pair)
-        new_ids = batch.select(F.col(id_col).alias("__nid"))
-        b_new = pairs.join(
-            new_ids, pairs["doc_b"] == F.col("__nid"), "left_semi"
-        ).select(F.col("doc_b").alias(id_col))
-        a_new_b_corpus = (
-            pairs.join(new_ids, pairs["doc_b"] == F.col("__nid"), "left_anti")
-            .join(new_ids, pairs["doc_a"] == F.col("__nid"), "left_semi")
-            .select(F.col("doc_a").alias(id_col))
-        )
-        removals = b_new.union(a_new_b_corpus).distinct()
-        max_ingested = None
-        if replay_guard == "watermark":
-            max_ingested = batch.agg(F.max(id_col)).first()[0]
-            if max_ingested is None:
-                if wm is not None:
-                    _write_wm(batch_id, wm["max_id"])
-                unpersist_all()
-                return
-        survivors = batch.join(removals, id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        # index first, then corpus (same ordering argument as the text
-        # sink: an orphan index row only re-proposes a candidate)
-        sig.join(survivors, id_col, "left_semi").write.mode("append").parquet(
-            index_path
-        )
-        _corpus_append(survivors, batch_id)
-        if replay_guard == "watermark":
-            _write_wm(batch_id, max_ingested)
-        unpersist_all()
 
-    return (
-        stream_images.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return _near_dup_ingest(
+        stream_images,
+        corpus_path,
+        index_path,
+        checkpoint,
+        sink="stream_image_dedup_ingest",
+        id_col=id_col,
+        payload_col=payload_col,
+        replay_guard=replay_guard,
+        fingerprint=fingerprint,
+        probe=probe,
+        index_rows=lambda docs, sig: sig.join(docs.select(id_col), id_col, "left_semi"),
     )
 
 
@@ -875,9 +874,10 @@ def stream_video_dedup_ingest(
     frame-decoded once (``multimodal.video_frame_hashes``, map-side),
     scored against the already-ingested corpus via the
     persisted index (``multimodal.set_fingerprint_pairs_incremental``)
-    and against itself, and only survivors are appended. Survivor
-    rule matches every other sink: a batch video drops if it near-dups
-    any ingested video, or a lower-id video of its own batch.
+    and against itself, and only survivors are appended; the survivor
+    rule and crash-safety contract are the :func:`_near_dup_ingest`
+    skeleton's (the probe's match-level distinct absorbs duplicate
+    index rows).
 
     The index stores ``(id, set_hash, c, n)`` rows — ``c`` (the
     hash's multiplicity within the id) and ``n`` (the id's total
@@ -894,152 +894,42 @@ def stream_video_dedup_ingest(
     Passing ``hash_fn=multimodal.audio_cdc_segments,
     metric="containment", multiset=True, min_score_ppm=600_000``
     streams AUDIO clips with online TRIM filtering — a re-posted cut
-    of an already-ingested recording is dropped at ingest.
-
-    Crash safety mirrors the image sink exactly (same guard
-    functions): missing-corpus-with-surviving-artifacts restarts FAIL
-    loudly; a lost index is rebuilt FROM the corpus (one re-decode)
-    and persisted before use; the index is appended before the
-    corpus, so a crash between the two only re-proposes candidates
-    (the probe's match-level distinct absorbs duplicate index rows);
-    ``replay_guard="watermark"`` (monotone ids) replaces the
-    corpus-sized anti-join with a pure filter and makes corpus
-    appends per-batch dynamic partition OVERWRITES. foreachBatch is
-    AT-LEAST-once: every write here is per-key idempotent or
-    partition-overwritten — never an additive fold."""
-    import json
-    import os
-
-    from dataflow_python_etl_spark.operators.dedup import _persist, unpersist_all
+    of an already-ingested recording is dropped at ingest."""
+    from dataflow_python_etl_spark.operators.dedup import _persist
     from dataflow_python_etl_spark.operators.multimodal import (
-        set_fingerprint_pairs_incremental,
+        set_fingerprint_counts,
         video_frame_hashes,
     )
 
     if hash_fn is None:
         hash_fn = video_frame_hashes
-    if replay_guard not in ("anti_join", "watermark"):
-        raise ValueError(
-            f"replay_guard must be anti_join|watermark, got {replay_guard!r}"
-        )
 
-    wm_path = corpus_path + ".__ingest_watermark"
+    def fingerprint(docs: DataFrame) -> DataFrame:
+        # decode ONCE per payload: the (id, hash) fan-out
+        return _persist(hash_fn(docs, id_col, payload_col).toDF("sid", "shash"))
 
-    def _read_wm() -> dict | None:
-        if not os.path.exists(wm_path):
-            return None
-        with open(wm_path) as f:
-            return json.load(f)
+    def probe(_batch, raw, _corpus, index) -> DataFrame:
+        return _set_pairs(index, raw, metric, min_score_ppm, multiset)
 
-    def _write_wm(batch_id: int, max_id) -> None:
-        tmp = wm_path + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "max_id": max_id}, f)
-        os.replace(tmp, wm_path)
-
-    def _corpus_append(survivors: DataFrame, batch_id: int) -> None:
-        if replay_guard == "watermark":
-            (
-                survivors.withColumn("ingest_batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(corpus_path)
-            )
-        else:
-            survivors.write.mode("append").parquet(corpus_path)
-
-    def _raw(videos: DataFrame) -> DataFrame:
-        # decode ONCE per payload: the (id, hash) fan-out, canonical names
-        return hash_fn(
-            videos.select(id_col, payload_col), id_col, payload_col
-        ).toDF("sid", "shash")
-
-    def _counts(raw: DataFrame) -> DataFrame:
-        # (id, set_hash, c, n): multiplicity + total denormalized per row
-        from pyspark.sql import Window
-
-        r = raw if multiset else raw.distinct()
+    def index_rows(docs: DataFrame, raw: DataFrame) -> DataFrame:
         return (
-            r.groupBy("sid", "shash")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .withColumn("n", F.sum("c").over(Window.partitionBy("sid")))
+            set_fingerprint_counts(raw, multiset)
             .toDF(id_col, "set_hash", "c", "n")
+            .join(docs.select(id_col), id_col, "left_semi")
         )
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.select(id_col, payload_col)
-        if (
-            not os.path.exists(corpus_path)
-            and batch_id > 0
-            and (os.path.exists(index_path) or os.path.exists(wm_path))
-        ):
-            raise RuntimeError(
-                f"stream_video_dedup_ingest restart at batch {batch_id} but "
-                f"corpus {corpus_path} is missing — refusing to rebuild from "
-                "a single batch; restore the corpus or start a fresh "
-                "checkpoint."
-            )
-        wm = _read_wm() if replay_guard == "watermark" else None
-        if wm is not None and batch_id == wm["batch_id"]:
-            return  # this exact batch fully committed — replay is a no-op
-        index_cnt = None
-        if os.path.exists(corpus_path):
-            corpus = spark.read.parquet(corpus_path)
-            batch = _guard_replay(batch, corpus, id_col, replay_guard, wm)
-            if not os.path.exists(index_path):
-                # rebuild the FULL corpus index and PERSIST it before
-                # use — a partial index silently blinds later batches
-                _counts(_raw(corpus)).write.parquet(index_path)
-            index_cnt = spark.read.parquet(index_path).toDF(
-                "sid", "shash", "c", "n"
-            )
-        raw = _persist(_raw(batch))
-        pairs = set_fingerprint_pairs_incremental(
-            index_cnt, raw, metric=metric,
-            min_score_ppm=min_score_ppm, multiset=multiset,
-        )
-        # a new video drops when it pairs with anything already
-        # decided: an ingested video (either side) or a lower-id
-        # video of its own batch (id_b of a new-new pair)
-        new_ids = batch.select(F.col(id_col).alias("__nid"))
-        b_new = pairs.join(
-            new_ids, pairs["id_b"] == F.col("__nid"), "left_semi"
-        ).select(F.col("id_b").alias(id_col))
-        a_new_b_corpus = (
-            pairs.join(new_ids, pairs["id_b"] == F.col("__nid"), "left_anti")
-            .join(new_ids, pairs["id_a"] == F.col("__nid"), "left_semi")
-            .select(F.col("id_a").alias(id_col))
-        )
-        removals = b_new.union(a_new_b_corpus).distinct()
-        max_ingested = None
-        if replay_guard == "watermark":
-            max_ingested = batch.agg(F.max(id_col)).first()[0]
-            if max_ingested is None:
-                if wm is not None:
-                    _write_wm(batch_id, wm["max_id"])
-                unpersist_all()
-                return
-        survivors = batch.join(removals, id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        # index first, then corpus (an orphan index row only
-        # re-proposes a candidate — absorbed by the probe's
-        # match-level distinct)
-        _counts(raw).join(
-            survivors.select(id_col), id_col, "left_semi"
-        ).write.mode("append").parquet(index_path)
-        _corpus_append(survivors, batch_id)
-        if replay_guard == "watermark":
-            _write_wm(batch_id, max_ingested)
-        unpersist_all()
-
-    return (
-        stream_videos.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return _near_dup_ingest(
+        stream_videos,
+        corpus_path,
+        index_path,
+        checkpoint,
+        sink="stream_video_dedup_ingest",
+        id_col=id_col,
+        payload_col=payload_col,
+        replay_guard=replay_guard,
+        fingerprint=fingerprint,
+        probe=probe,
+        index_rows=index_rows,
     )
 
 
@@ -1079,9 +969,6 @@ def apply_ivf_index_batch(
     is written before the first data batch and validated against the
     passed codebooks on every restart, so code/codebook drift is
     impossible."""
-    import json
-    import os
-
     from dataflow_python_etl_spark.operators.similarity import (
         CENTROID_SIDECAR,
         PQ_SIDECAR,
@@ -1148,30 +1035,18 @@ def apply_ivf_index_batch(
             )
     else:
         os.makedirs(index_path, exist_ok=True)
-        tmp = cent_sidecar + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump(centroids, f)
-        os.replace(tmp, cent_sidecar)
+        _write_json_atomic(cent_sidecar, centroids)
 
     batch = batch_df.select(id_col, vec_col)
-    wm_path = index_path + ".__ingest_watermark"
-    wm = None
-    if replay_guard == "watermark" and os.path.exists(wm_path):
-        with open(wm_path) as f:
-            wm = json.load(f)
-        if batch_id == wm["batch_id"]:
-            return  # this exact batch fully committed — replay is a no-op
-        batch = batch.where(F.col(id_col) > F.lit(wm["max_id"]))
-
+    wm_path = _watermark_path(index_path)
+    wm = _read_json(wm_path) if replay_guard == "watermark" else None
+    if wm is not None and batch_id == wm["batch_id"]:
+        return  # this exact batch fully committed — replay is a no-op
     max_id = None
     if replay_guard == "watermark":
-        max_id = batch.agg(F.max(id_col)).first()[0]
+        batch = _guard_replay(batch, None, id_col, replay_guard, wm)
+        max_id = _decided_max_id(batch, id_col, wm, wm_path, batch_id)
         if max_id is None:  # nothing new this batch
-            if wm is not None:
-                tmp = wm_path + ".__tmp"
-                with open(tmp, "w") as f:
-                    json.dump({"batch_id": batch_id, "max_id": wm["max_id"]}, f)
-                os.replace(tmp, wm_path)
             return
 
     assigned = _assigned(batch, centroids, id_col, vec_col)
@@ -1179,18 +1054,9 @@ def apply_ivf_index_batch(
         assigned = _quantize_int8(assigned)
     elif quantize == "pq":
         assigned = _quantize_pq(assigned, pq_codebooks)
-    (
-        assigned.withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid", "ingest_batch")
-        .parquet(index_path)
-    )
+    _overwrite_partitions(assigned, index_path, "cid", batch_id=batch_id)
     if replay_guard == "watermark":
-        tmp = wm_path + ".__tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "max_id": max_id}, f)
-        os.replace(tmp, wm_path)
+        _write_watermark(wm_path, batch_id, max_id)
 
 
 def stream_embeddings_to_ivf_index(
@@ -1228,12 +1094,7 @@ def stream_embeddings_to_ivf_index(
             replay_guard=replay_guard,
         )
 
-    return (
-        stream_vectors.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
+    return _start(stream_vectors, apply, checkpoint)
 
 
 def stream_text_containment_ingest(
@@ -1289,33 +1150,40 @@ def stream_text_containment_ingest(
 # ---------------------------------------------------------------------------
 # Chunked-CDC streaming containment for LONG media (VERDICT r8 #3):
 # an hour-scale recording never fits one micro-batch row, so it
-# arrives as ordered (clip_id, chunk_seq, samples) PCM chunk rows —
-# possibly spread across micro-batches — and the CDC segmenter must
-# re-assemble per clip with BOUNDED carry state (multimodal.
+# arrives as ordered (clip_id, chunk_seq, payload) chunk rows —
+# possibly spread across micro-batches — and an incremental parser
+# must re-assemble per clip with BOUNDED carry state (multimodal.
 # cdc_push_chunk: W-1 window tail + the open segment's partials,
-# O(W) per open clip regardless of recording length).
+# O(W) per open clip regardless of recording length; video_cdc_
+# push_chunk: a RIFF walker whose buffer stays bounded by one frame).
 # ---------------------------------------------------------------------------
 
 CHUNK_STATE_DDL = (
     "clip_id long, tail array<double>, seg_sum long, seg_len long, "
     "n_seen long, next_seq long"
 )
-_CHUNK_UPD_DDL = (
-    "clip_id long, seg_hashes array<long>, tail array<double>, "
-    "seg_sum long, seg_len long, n_seen long, next_seq long, "
-    "finished boolean"
+VIDEO_CHUNK_STATE_DDL = (
+    "clip_id long, stage string, buf binary, vids long, end long, "
+    "movi_end long, abs long, skip long, n_frames long, next_seq long"
 )
 
 
-def _read_ledger(table_path: str) -> dict | None:
-    import json
-    import os
+class _ChunkCodec(NamedTuple):
+    """What a chunked sink plugs into :func:`_apply_chunked_batch`."""
 
-    p = os.path.join(table_path, "_applied_batch.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
+    kind: str  # "audio" | "video", for error messages
+    data_col: str  # the chunk payload column
+    hash_col: str  # on-disk hash column of the segment and index rows
+    state_ddl: str  # on-disk carry state, one row per open clip
+    new: Callable  # () -> fresh parser state
+    load: Callable  # carry-state row -> parser state
+    push: Callable  # (state, chunk) -> (state, completed hashes)
+    finish: Callable  # state -> trailing hashes; raises on a malformed clip
+    dump: Callable  # parser state -> carry-state fields
+    metric: str  # set_fingerprint_pairs_incremental metric
+    multiset: bool
+    length: tuple  # (state field, corpus column) of the clip length
+    size_col: str  # corpus column of the fingerprint size
 
 
 def _guard_lost_corpus(
@@ -1334,8 +1202,6 @@ def _guard_lost_corpus(
     false-positive. Only the ledger flag — swapped atomically WITH the
     state, LAST — proves the corpus should exist. Ledgers predating the
     flag default to True (conservative against silent data loss)."""
-    import os
-
     if (
         not os.path.exists(corpus_path)
         and ledger is not None
@@ -1349,250 +1215,158 @@ def _guard_lost_corpus(
         )
 
 
-def apply_chunked_audio_batch(
+def _apply_chunked_batch(
     batch_df: DataFrame,
     batch_id: int,
+    codec: _ChunkCodec,
     *,
     seg_path: str,
     state_path: str,
     index_path: str,
     corpus_path: str,
-    id_col: str = "clip_id",
-    min_containment_ppm: int = 600_000,
+    id_col: str,
+    min_score_ppm: int,
 ) -> None:
-    """One foreachBatch application of the chunked-audio containment
-    sink — module-level (the ``apply_ivf_index_batch`` precedent) so
-    tests drive the exact production path deterministically and the
-    streamed-vs-batch parity pin needs no micro-batch timing.
+    """The one foreachBatch applier behind the chunked sinks; ``codec``
+    binds the incremental parser and the scoring arithmetic.
 
-    Batch rows: ``(clip_id, chunk_seq, samples array<double>,
-    is_last boolean)`` — decoded PCM chunks IN ORDER per clip (chunk
-    splitting/container decode is the upstream landing contract at
-    100 TB; this sink owns reassembly, not demuxing). Out-of-order
-    or gapped arrival raises loudly: a reorder buffer is upstream's
-    job, and a silently mis-ordered chunk would fabricate segment
-    boundaries.
+    Batch rows: ``(clip_id, chunk_seq, <codec.data_col>, is_last)``,
+    IN ORDER per clip (chunk splitting / container decode is the
+    upstream landing contract; this sink owns reassembly). Out-of-order
+    or gapped arrival and a mid-clip ``is_last`` raise loudly: a
+    silently mis-ordered chunk would fabricate fingerprint boundaries.
 
-    Idempotence matrix (foreachBatch is AT-LEAST-once; every write
-    here is a deterministic function of (state as of B−1, batch B)):
+    Idempotence matrix (foreachBatch is AT-LEAST-once; every write is a
+    deterministic function of (state as of B−1, batch B)):
 
-    - completed segment hashes → ``seg_path`` partition
-      ``ingest_batch=B`` via DYNAMIC partition overwrite (replay
-      rewrites its own partition — the stream_docs_to_search_index
-      pattern);
+    - completed hashes → ``seg_path`` partition ``ingest_batch=B`` via
+      DYNAMIC partition overwrite (replay rewrites its own partition);
     - survivor index rows / corpus metadata → same pattern on
       ``index_path`` / ``corpus_path``;
     - carry state → ``write_and_swap`` with the ``_applied_batch``
-      ledger INSIDE the swap (the refresh_additive_agg pattern), and
-      this swap happens LAST, so a crash anywhere earlier replays
-      into identical partition overwrites, and a replay after the
-      swap is a recorded no-op.
+      ledger INSIDE the swap, LAST, so a crash anywhere earlier
+      replays into identical partition overwrites and a replay after
+      the swap is a recorded no-op.
 
-    Decision rule (the other ingest sinks' survivor contract): a
-    clip that FINISHES this batch is dropped iff its CDC segment
-    multiset is contained ≥ ``min_containment_ppm`` in any already-
-    ingested clip (exact-integer cross-multiply, multiset least/min
-    — the batch ``audio_containment_pairs`` arithmetic) or in any
-    lower-id clip finishing in the same batch; a clip whose every
-    segment fell under the CDC minimum has no evidence and is
-    dropped ("no evidence, no ingest" — the DSIR-gate discipline).
-    """
-    import json
-    import os
-
+    Decision rule: every clip that FINISHES this batch is scored
+    through ``multimodal.set_fingerprint_pairs_incremental`` (exact-
+    integer ppm) against the index and the other finishing clips, and
+    the shared :func:`_survivors` rule drops it if it matches an
+    ingested clip or a lower-id finishing clip. A clip with no hash
+    rows has no evidence and is dropped ("no evidence, no ingest").
+    The index probe excludes ``ingest_batch == B`` (the round-10
+    own-partition rule): a crashed attempt of THIS batch may already
+    have written its index partition, and probing it would self-match
+    every replayed clip and invert lower-id-wins peer decisions; the
+    dynamic overwrite of the emptied survivor set would then no-op and
+    the state swap seal a permanent index/corpus split."""
     import pandas as pd
 
-    from dataflow_python_etl_spark.operators.multimodal import (
-        cdc_finish,
-        cdc_push_chunk,
-        cdc_state_new,
-    )
+    from dataflow_python_etl_spark.operators.dedup import unpersist_all
+    from dataflow_python_etl_spark.operators.multimodal import set_fingerprint_counts
     from dataflow_python_etl_spark.operators.upsert import write_and_swap
 
     spark = batch_df.sparkSession
-    ledger = _read_ledger(state_path)
-    applied = None if ledger is None else int(ledger["batch_id"])
-    if applied is not None and batch_id <= applied:
+    ledger = _read_json(os.path.join(state_path, "_applied_batch.json"))
+    if ledger is not None and batch_id <= int(ledger["batch_id"]):
         return  # fully committed — replay is a no-op
-    _guard_lost_corpus(ledger, corpus_path, batch_id, "audio")
+    _guard_lost_corpus(ledger, corpus_path, batch_id, codec.kind)
     chunks = batch_df.select(
-        F.col(id_col).alias("clip_id"), "chunk_seq", "samples", "is_last"
+        F.col(id_col).alias("clip_id"), "chunk_seq", codec.data_col, "is_last"
     )
     if chunks.isEmpty():
         return
     state = (
         spark.read.parquet(state_path)
         if os.path.exists(state_path)
-        else spark.createDataFrame([], CHUNK_STATE_DDL)
+        else spark.createDataFrame([], codec.state_ddl)
     )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("chunk_seq")
         first = pdf.iloc[0]
+        clip = int(first["clip_id"])
         if pd.isna(first["next_seq"]):
-            st, nxt = cdc_state_new(), 0
+            st, nxt = codec.new(), 0
         else:
-            st = (
-                list(first["tail"]),
-                int(first["seg_sum"]),
-                int(first["seg_len"]),
-                int(first["n_seen"]),
-            )
-            nxt = int(first["next_seq"])
+            st, nxt = codec.load(first), int(first["next_seq"])
         seqs = [int(s) for s in pdf["chunk_seq"]]
         if seqs[0] != nxt or any(b != a + 1 for a, b in zip(seqs, seqs[1:])):
             raise ValueError(
-                f"chunked audio ingest: clip {int(first['clip_id'])} chunks "
-                f"arrived out of order (expected seq {nxt}, got {seqs}) — "
-                "ordered delivery is the upstream contract"
+                f"chunked {codec.kind} ingest: clip {clip} chunks arrived out "
+                f"of order (expected seq {nxt}, got {seqs}) — ordered delivery "
+                "is the upstream contract"
             )
         lasts = [bool(x) for x in pdf["is_last"]]
         if any(lasts[:-1]):
             raise ValueError(
-                f"chunked audio ingest: clip {int(first['clip_id'])} has "
-                "is_last on a non-final chunk"
+                f"chunked {codec.kind} ingest: clip {clip} has is_last on a "
+                "non-final chunk"
             )
         hashes: list = []
-        for samples in pdf["samples"]:
-            st, hs = cdc_push_chunk(st, samples)
+        for data in pdf[codec.data_col]:
+            st, hs = codec.push(st, data)
             hashes.extend(hs)
-        finished = lasts[-1]
-        if finished:
-            hashes.extend(cdc_finish(st))
-        tail, seg_sum, seg_len, n_seen = st
-        return pd.DataFrame(
-            [
-                {
-                    "clip_id": int(first["clip_id"]),
-                    "seg_hashes": hashes,
-                    "tail": [float(x) for x in tail],
-                    "seg_sum": seg_sum,
-                    "seg_len": seg_len,
-                    "n_seen": n_seen,
-                    "next_seq": seqs[-1] + 1,
-                    "finished": finished,
-                }
-            ]
-        )
+        if lasts[-1]:
+            hashes.extend(codec.finish(st))
+        row = {"clip_id": clip, "hashes": hashes, "next_seq": seqs[-1] + 1, "finished": lasts[-1]}
+        return pd.DataFrame([{**row, **codec.dump(st)}])
 
     upd = (
         chunks.join(state, "clip_id", "left")
         .groupBy("clip_id")
-        .applyInPandas(kernel, _CHUNK_UPD_DDL)
+        .applyInPandas(kernel, codec.state_ddl + ", hashes array<long>, finished boolean")
         .localCheckpoint(eager=True)  # 4 consumers; kernel runs once
     )
+    h = codec.hash_col
 
-    # 1) this batch's completed segments: replay overwrites itself
-    (
-        upd.select("clip_id", F.explode("seg_hashes").alias("seg_hash"))
-        .withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(seg_path)
+    # 1) this batch's completed hashes: replay overwrites itself
+    _overwrite_partitions(
+        upd.select("clip_id", F.explode("hashes").alias(h)), seg_path, batch_id=batch_id
     )
 
-    # 2) finished clips: assemble full multiset, score, ingest-or-drop
-    fin = upd.where("finished").select("clip_id", "n_seen")
+    # 2) finished clips: score the whole fingerprint, ingest or drop
+    length_col, length_name = codec.length
+    fin = upd.where("finished").select("clip_id", length_col)
     if not fin.isEmpty():
-        counts = (
+        raw = (
             spark.read.parquet(seg_path)
-            .join(fin.select("clip_id"), "clip_id", "left_semi")
-            .groupBy("clip_id", "seg_hash")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
+            .join(fin, "clip_id", "left_semi")
+            .select("clip_id", h)
         )
-        sizes = counts.groupBy("clip_id").agg(F.sum("c").cast("long").alias("n"))
-        probe = counts.join(sizes, "clip_id").localCheckpoint(eager=True)
-        dropped = spark.createDataFrame([], "clip_id long")
+        counts = set_fingerprint_counts(raw, codec.multiset).toDF("clip_id", h, "c", "n")
+        index = None
         if os.path.exists(index_path):
-            # Replay safety: a crashed prior attempt of THIS batch may
-            # already have written index partition ingest_batch=B; probing
-            # against it would self-match every replayed finishing clip at
-            # 1e6 ppm (and invert same-batch lower-id-wins peer decisions),
-            # then the dynamic overwrite of an emptied survivor set no-ops
-            # and the state swap seals a permanent index/corpus split.
-            # Excluding our own partition makes replay see exactly the
-            # inputs the original attempt saw (partition-pruned scan).
-            idx = (
+            index = (
                 spark.read.parquet(index_path)
                 .where(F.col("ingest_batch") != F.lit(batch_id))
-                .select(
-                    F.col("clip_id").alias("cid"),
-                    "seg_hash",
-                    F.col("c").alias("ic"),
-                    F.col("n").alias("inn"),
-                )
+                .select("clip_id", h, F.col("c") if codec.multiset else F.lit(1).cast("long"), "n")
             )
-            dropped = (
-                probe.join(idx, "seg_hash")
-                .groupBy("clip_id", "cid")
-                .agg(
-                    F.sum(F.least("c", "ic")).alias("common"),
-                    F.first("n").alias("n"),
-                    F.first("inn").alias("inn"),
-                )
-                .where(
-                    F.col("common") * F.lit(1_000_000)
-                    >= F.lit(min_containment_ppm) * F.least("n", "inn")
-                )
-                .select("clip_id")
-                .distinct()
-            )
-        a, b = probe.alias("a"), probe.alias("b")
-        peer_dropped = (
-            a.join(
-                b,
-                (F.col("a.seg_hash") == F.col("b.seg_hash"))
-                & (F.col("a.clip_id") < F.col("b.clip_id")),
-            )
-            .groupBy(
-                F.col("b.clip_id").alias("clip_id"),
-                F.col("a.clip_id").alias("peer"),
-            )
-            .agg(
-                F.sum(F.least(F.col("a.c"), F.col("b.c"))).alias("common"),
-                F.first(F.col("a.n")).alias("na"),
-                F.first(F.col("b.n")).alias("nb"),
-            )
-            .where(
-                F.col("common") * F.lit(1_000_000)
-                >= F.lit(min_containment_ppm) * F.least("na", "nb")
-            )
-            .select("clip_id")
-            .distinct()
+        pairs = _set_pairs(index, raw, codec.metric, min_score_ppm, codec.multiset)
+        survivors = _survivors(
+            counts.select("clip_id", "n").distinct(), pairs, "clip_id", index is not None
         )
-        survivors = (
-            sizes.select("clip_id")  # zero-segment clips absent: dropped
-            .join(dropped.unionByName(peer_dropped), "clip_id", "left_anti")
+        _overwrite_partitions(
+            counts.join(survivors.select("clip_id"), "clip_id", "left_semi").select(
+                "clip_id", h, *(["c"] if codec.multiset else []), "n"
+            ),
+            index_path,
+            batch_id=batch_id,
         )
-        (
-            probe.join(survivors, "clip_id", "left_semi")
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(index_path)
-        )
-        (
-            fin.join(survivors, "clip_id", "left_semi")
-            .join(sizes, "clip_id")
-            .select(
+        _overwrite_partitions(
+            fin.join(survivors, "clip_id").select(
                 "clip_id",
-                F.col("n_seen").alias("n_samples"),
-                F.col("n").alias("n_segments"),
-            )
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(corpus_path)
+                F.col(length_col).alias(length_name),
+                F.col("n").alias(codec.size_col),
+            ),
+            corpus_path,
+            batch_id=batch_id,
         )
+        unpersist_all()
 
     # 3) carry state LAST, ledger swapped atomically with it
     new_state = state.join(upd.select("clip_id"), "clip_id", "left_anti").unionByName(
-        upd.where(~F.col("finished")).select(
-            "clip_id", "tail", "seg_sum", "seg_len", "n_seen", "next_seq"
-        )
+        upd.where(~F.col("finished")).select(*state.columns)
     )
     write_and_swap(
         new_state,
@@ -1611,15 +1385,73 @@ def apply_chunked_audio_batch(
     )
 
 
-VIDEO_CHUNK_STATE_DDL = (
-    "clip_id long, stage string, buf binary, vids long, end long, "
-    "movi_end long, abs long, skip long, n_frames long, next_seq long"
-)
-_VIDEO_CHUNK_UPD_DDL = (
-    "clip_id long, frame_hashes array<long>, stage string, buf binary, "
-    "vids long, end long, movi_end long, abs long, skip long, "
-    "n_frames long, next_seq long, finished boolean"
-)
+def apply_chunked_audio_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    *,
+    seg_path: str,
+    state_path: str,
+    index_path: str,
+    corpus_path: str,
+    id_col: str = "clip_id",
+    min_containment_ppm: int = 600_000,
+) -> None:
+    """One foreachBatch application of the chunked-audio containment
+    sink — module-level (the ``apply_ivf_index_batch`` precedent) so
+    tests drive the exact production path deterministically and the
+    streamed-vs-batch parity pin needs no micro-batch timing.
+
+    The codec binding of :func:`_apply_chunked_batch` (row contract,
+    idempotence matrix and survivor rule live there) for decoded PCM
+    chunks ``(clip_id, chunk_seq, samples array<double>, is_last)``,
+    reassembled by ``multimodal.cdc_push_chunk`` into CDC segments
+    (``seg_hash`` rows). A finishing clip is dropped iff its segment
+    MULTISET is contained ≥ ``min_containment_ppm`` in an already-
+    ingested clip or a lower-id clip finishing in the same batch
+    (exact-integer cross-multiply, multiset least/min — the batch
+    ``audio_containment_pairs`` arithmetic); a clip whose every segment
+    fell under the CDC minimum has no evidence and is dropped (the
+    DSIR-gate discipline). Corpus rows: ``(clip_id, n_samples,
+    n_segments)``."""
+    from dataflow_python_etl_spark.operators.multimodal import (
+        cdc_finish,
+        cdc_push_chunk,
+        cdc_state_new,
+    )
+
+    codec = _ChunkCodec(
+        kind="audio",
+        data_col="samples",
+        hash_col="seg_hash",
+        state_ddl=CHUNK_STATE_DDL,
+        new=cdc_state_new,
+        load=lambda r: (
+            list(r["tail"]), int(r["seg_sum"]), int(r["seg_len"]), int(r["n_seen"])
+        ),
+        push=cdc_push_chunk,
+        finish=cdc_finish,
+        dump=lambda st: {
+            "tail": [float(x) for x in st[0]],
+            "seg_sum": st[1],
+            "seg_len": st[2],
+            "n_seen": st[3],
+        },
+        metric="containment",
+        multiset=True,
+        length=("n_seen", "n_samples"),
+        size_col="n_segments",
+    )
+    _apply_chunked_batch(
+        batch_df,
+        batch_id,
+        codec,
+        seg_path=seg_path,
+        state_path=state_path,
+        index_path=index_path,
+        corpus_path=corpus_path,
+        id_col=id_col,
+        min_score_ppm=min_containment_ppm,
+    )
 
 
 def apply_chunked_video_batch(
@@ -1637,225 +1469,65 @@ def apply_chunked_video_batch(
     sink — the :func:`apply_chunked_audio_batch` twin for recordings
     that never fit one micro-batch row, fed as arbitrary BYTE ranges
     of an MJPEG AVI stream: ``(clip_id, chunk_seq, data binary,
-    is_last)``, in order per clip (chunk splitting is the upstream
-    landing contract; boundaries need not align with frames or RIFF
-    chunks — the carry state is an incremental parser,
-    ``multimodal.video_cdc_push_chunk``, whose buffer stays bounded
-    by one frame). Out-of-order/gapped arrival and mid-clip is_last
-    raise loudly, as in the audio sink.
+    is_last)``; boundaries need not align with frames or RIFF chunks
+    (the carry state is ``multimodal.video_cdc_push_chunk``'s
+    incremental parser, its buffer bounded by one frame). Row
+    contract, idempotence matrix and survivor rule:
+    :func:`_apply_chunked_batch`.
 
     Decision rule — the batch :func:`~.multimodal.video_near_dup_pairs`
     arithmetic exactly: a finishing clip is dropped iff its DISTINCT
-    frame-hash set has Jaccard ≥ ``min_jaccard_ppm`` (exact-integer
+    ``frame_hash`` set has Jaccard ≥ ``min_jaccard_ppm`` (exact-integer
     cross-multiply, ``1e6·common vs ppm·(na+nb−common)``) with any
     already-ingested clip or a lower-id clip finishing in the same
     batch; a clip whose stream carried no frames fails loudly at
     ``video_cdc_finish`` (a corrupt upload is an error, not a silent
     drop — unlike audio's no-evidence rule, zero frames here means a
-    malformed container).
-
-    Idempotence matrix: identical to the audio sink — per-batch
-    DYNAMIC partition overwrites for frame hashes / survivor index /
-    corpus, the state+ledger ``write_and_swap`` LAST, and the index
-    probe filtered to ``ingest_batch != batch_id`` so a crash-replay
-    after the index write reproduces the original attempt's inputs
-    (the round-10 ADVICE fix, applied here from birth)."""
-    import json
-    import os
-
-    import pandas as pd
-
+    malformed container). Corpus rows: ``(clip_id, n_frames,
+    n_distinct_hashes)``."""
     from dataflow_python_etl_spark.operators.multimodal import (
         video_cdc_finish,
         video_cdc_push_chunk,
         video_cdc_state_new,
     )
-    from dataflow_python_etl_spark.operators.upsert import write_and_swap
 
-    spark = batch_df.sparkSession
-    ledger = _read_ledger(state_path)
-    applied = None if ledger is None else int(ledger["batch_id"])
-    if applied is not None and batch_id <= applied:
-        return  # fully committed — replay is a no-op
-    _guard_lost_corpus(ledger, corpus_path, batch_id, "video")
-    chunks = batch_df.select(
-        F.col(id_col).alias("clip_id"), "chunk_seq", "data", "is_last"
-    )
-    if chunks.isEmpty():
-        return
-    state = (
-        spark.read.parquet(state_path)
-        if os.path.exists(state_path)
-        else spark.createDataFrame([], VIDEO_CHUNK_STATE_DDL)
-    )
-    scalar_keys = ("vids", "end", "movi_end", "abs", "skip", "n_frames")
+    keys = ("vids", "end", "movi_end", "abs", "skip", "n_frames")
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("chunk_seq")
-        first = pdf.iloc[0]
-        if pd.isna(first["next_seq"]):
-            st, nxt = video_cdc_state_new(), 0
-        else:
-            st = {"stage": first["stage"], "buf": bytes(first["buf"])}
-            st.update({k: int(first[k]) for k in scalar_keys})
-            nxt = int(first["next_seq"])
-        seqs = [int(s) for s in pdf["chunk_seq"]]
-        if seqs[0] != nxt or any(b != a + 1 for a, b in zip(seqs, seqs[1:])):
-            raise ValueError(
-                f"chunked video ingest: clip {int(first['clip_id'])} chunks "
-                f"arrived out of order (expected seq {nxt}, got {seqs}) — "
-                "ordered delivery is the upstream contract"
-            )
-        lasts = [bool(x) for x in pdf["is_last"]]
-        if any(lasts[:-1]):
-            raise ValueError(
-                f"chunked video ingest: clip {int(first['clip_id'])} has "
-                "is_last on a non-final chunk"
-            )
-        hashes: list = []
-        for data in pdf["data"]:
-            st, hs = video_cdc_push_chunk(st, bytes(data))
-            hashes.extend(hs)
-        finished = lasts[-1]
-        if finished:
-            video_cdc_finish(st)  # loud on truncation / no frames
-        row = {
-            "clip_id": int(first["clip_id"]),
-            "frame_hashes": hashes,
+    def finish(st: dict) -> list:
+        video_cdc_finish(st)  # loud on truncation / no frames
+        return []
+
+    codec = _ChunkCodec(
+        kind="video",
+        data_col="data",
+        hash_col="frame_hash",
+        state_ddl=VIDEO_CHUNK_STATE_DDL,
+        new=video_cdc_state_new,
+        load=lambda r: {
+            "stage": r["stage"], "buf": bytes(r["buf"]), **{k: int(r[k]) for k in keys}
+        },
+        push=lambda st, data: video_cdc_push_chunk(st, bytes(data)),
+        finish=finish,
+        dump=lambda st: {
             "stage": st["stage"],
             "buf": bytearray(st["buf"]),
-            "next_seq": seqs[-1] + 1,
-            "finished": finished,
-        }
-        row.update({k: int(st[k]) for k in scalar_keys})
-        return pd.DataFrame([row])
-
-    upd = (
-        chunks.join(state, "clip_id", "left")
-        .groupBy("clip_id")
-        .applyInPandas(kernel, _VIDEO_CHUNK_UPD_DDL)
-        .localCheckpoint(eager=True)  # 4 consumers; kernel runs once
-    )
-
-    # 1) this batch's completed frame hashes: replay overwrites itself
-    (
-        upd.select("clip_id", F.explode("frame_hashes").alias("frame_hash"))
-        .withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(seg_path)
-    )
-
-    # 2) finished clips: assemble DISTINCT hash set, Jaccard, decide
-    fin = upd.where("finished").select("clip_id", "n_frames")
-    if not fin.isEmpty():
-        hset = (
-            spark.read.parquet(seg_path)
-            .join(fin.select("clip_id"), "clip_id", "left_semi")
-            .select("clip_id", "frame_hash")
-            .distinct()
-        )
-        sizes = hset.groupBy("clip_id").agg(F.count(F.lit(1)).cast("long").alias("n"))
-        probe = hset.join(sizes, "clip_id").localCheckpoint(eager=True)
-        dropped = spark.createDataFrame([], "clip_id long")
-        if os.path.exists(index_path):
-            # replay safety: exclude our own partition (see audio twin)
-            idx = (
-                spark.read.parquet(index_path)
-                .where(F.col("ingest_batch") != F.lit(batch_id))
-                .select(
-                    F.col("clip_id").alias("cid"),
-                    "frame_hash",
-                    F.col("n").alias("inn"),
-                )
-            )
-            dropped = (
-                probe.join(idx, "frame_hash")
-                .groupBy("clip_id", "cid")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("common"),
-                    F.first("n").alias("n"),
-                    F.first("inn").alias("inn"),
-                )
-                .where(
-                    F.col("common") * F.lit(1_000_000)
-                    >= F.lit(min_jaccard_ppm)
-                    * (F.col("n") + F.col("inn") - F.col("common"))
-                )
-                .select("clip_id")
-                .distinct()
-            )
-        a, b = probe.alias("a"), probe.alias("b")
-        peer_dropped = (
-            a.join(
-                b,
-                (F.col("a.frame_hash") == F.col("b.frame_hash"))
-                & (F.col("a.clip_id") < F.col("b.clip_id")),
-            )
-            .groupBy(
-                F.col("b.clip_id").alias("clip_id"),
-                F.col("a.clip_id").alias("peer"),
-            )
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("common"),
-                F.first(F.col("a.n")).alias("na"),
-                F.first(F.col("b.n")).alias("nb"),
-            )
-            .where(
-                F.col("common") * F.lit(1_000_000)
-                >= F.lit(min_jaccard_ppm)
-                * (F.col("na") + F.col("nb") - F.col("common"))
-            )
-            .select("clip_id")
-            .distinct()
-        )
-        survivors = sizes.select("clip_id").join(
-            dropped.unionByName(peer_dropped), "clip_id", "left_anti"
-        )
-        (
-            probe.join(survivors, "clip_id", "left_semi")
-            .select("clip_id", "frame_hash", "n")
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(index_path)
-        )
-        (
-            fin.join(survivors, "clip_id", "left_semi")
-            .join(sizes, "clip_id")
-            .select(
-                "clip_id",
-                F.col("n_frames").alias("n_frames"),
-                F.col("n").alias("n_distinct_hashes"),
-            )
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(corpus_path)
-        )
-
-    # 3) carry state LAST, ledger swapped atomically with it
-    new_state = state.join(upd.select("clip_id"), "clip_id", "left_anti").unionByName(
-        upd.where(~F.col("finished")).select(
-            "clip_id", "stage", "buf", "vids", "end", "movi_end", "abs",
-            "skip", "n_frames", "next_seq",
-        )
-    )
-    write_and_swap(
-        new_state,
-        state_path,
-        extra_files={
-            "_applied_batch.json": json.dumps(
-                # corpus_written: see the audio twin — restart guard flag.
-                {
-                    "batch_id": batch_id,
-                    "corpus_written": os.path.exists(corpus_path),
-                }
-            )
+            **{k: int(st[k]) for k in keys},
         },
+        metric="jaccard",
+        multiset=False,
+        length=("n_frames", "n_frames"),
+        size_col="n_distinct_hashes",
+    )
+    _apply_chunked_batch(
+        batch_df,
+        batch_id,
+        codec,
+        seg_path=seg_path,
+        state_path=state_path,
+        index_path=index_path,
+        corpus_path=corpus_path,
+        id_col=id_col,
+        min_score_ppm=min_jaccard_ppm,
     )
 
 
@@ -1892,12 +1564,7 @@ def stream_chunked_video_dedup_ingest(
             min_jaccard_ppm=min_jaccard_ppm,
         )
 
-    return (
-        stream_chunks.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
+    return _start(stream_chunks, apply_batch, checkpoint)
 
 
 def stream_chunked_audio_containment_ingest(
@@ -1934,12 +1601,7 @@ def stream_chunked_audio_containment_ingest(
             min_containment_ppm=min_containment_ppm,
         )
 
-    return (
-        stream_chunks.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
+    return _start(stream_chunks, apply_batch, checkpoint)
 
 
 def stream_scd2_to_table(
@@ -1982,8 +1644,6 @@ def stream_scd2_to_table(
     from dataflow_python_etl_spark.operators.upsert import write_and_swap
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         spark = batch_df.sparkSession
         _guard_missing_table(table_path, batch_id)
         if not os.path.exists(table_path):
@@ -2006,12 +1666,7 @@ def stream_scd2_to_table(
         hist = scd2_apply_changes(dim, fresh, user_col, ts_col, attr_col, id_col)
         write_and_swap(hist, table_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
+    return _start(stream_df, apply_batch, checkpoint)
 
 
 def apply_search_index_batch(
@@ -2038,9 +1693,6 @@ def apply_search_index_batch(
 
     Exposed as a module function (not a closure) so replay semantics
     are directly testable."""
-    import json
-    import os
-
     from dataflow_python_etl_spark.functions.text import md5_hash60, tokens
     from dataflow_python_etl_spark.operators.search import (
         SEARCH_STATS,
@@ -2080,12 +1732,7 @@ def apply_search_index_batch(
             F.lit(batch_id).alias("batch"),
         )
     )
-    (
-        postings.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pbucket", "batch")
-        .parquet(path)
-    )
+    _overwrite_partitions(postings, path, "pbucket", "batch")
     s = lens.agg(
         F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
     ).first()
@@ -2120,12 +1767,7 @@ def stream_docs_to_search_index(
             batch_df, batch_id, path, id_col, text_col, n_buckets
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
+    return _start(doc_stream, apply, checkpoint)
 
 
 def apply_drift_monitor_batch(
@@ -2154,8 +1796,6 @@ def apply_drift_monitor_batch(
     that silently drops empty batches cannot tell "no drift" from
     "no data". Module-level (not a closure) so replay semantics are
     directly testable."""
-    import os
-
     from dataflow_python_etl_spark.operators.lm import (
         drift_report,
         gram_histogram,
@@ -2186,13 +1826,7 @@ def apply_drift_monitor_batch(
     # full-outer bucket join is non-empty by construction, so
     # drift_report always yields >= 1 row — and a probe here would
     # re-run the batch's gram fan-out a second time per micro-batch
-    (
-        top1.coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(out_path)
-    )
+    _overwrite_partitions(top1.coalesce(1), out_path, "batch")
 
 
 def stream_drift_monitor(
@@ -2218,12 +1852,7 @@ def stream_drift_monitor(
             id_col, text_col, buckets,
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
+    return _start(doc_stream, apply, checkpoint)
 
 
 def conversion_join(

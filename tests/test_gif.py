@@ -201,3 +201,7 @@ def test_gif_roundtrip_property():
         assert np.array_equal(decode_gif(encode_gif(img, interlace=interlace)), img)
 
     prop()
+
+
+def test_lzw_base_table_is_immutable():
+    assert isinstance(codecs._lzw_base(256), tuple)

@@ -1,4 +1,5 @@
-"""Ingest-watermark replay guard for stream_dedup_ingest.
+"""Ingest-watermark replay guard for stream_dedup_ingest (and, in the
+crash-replay pin, every sink on the shared near-dup ingest skeleton).
 
 The anti-join replay guard scans the corpus's id column every batch —
 a cost growing with the corpus forever. With MONOTONE doc ids the same
@@ -10,11 +11,20 @@ hive partitions overwritten idempotently on replay.
 
 import json
 import os
+from functools import partial
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from dataflow_python_etl_spark.operators.codecs import encode_png
 from dataflow_python_etl_spark.plans.checks import count_exchanges, explain_str
-from dataflow_python_etl_spark.streaming.pipeline import _guard_replay, stream_dedup_ingest
+from dataflow_python_etl_spark.streaming.pipeline import (
+    _guard_replay,
+    stream_dedup_ingest,
+    stream_image_dedup_ingest,
+    stream_text_containment_ingest,
+)
 
 TEXTS = {
     "a": "the quick brown fox jumps over the lazy dog near the old river bank today",
@@ -89,9 +99,36 @@ def test_watermark_ingest_matches_anti_join_twin(spark, tmp_path):
     assert wm["max_id"] == 14
 
 
-def _run_once(spark, src, corpus, index, ckpt):
-    q = stream_dedup_ingest(
-        spark.readStream.schema("doc_id long, text string").parquet(src),
+def _png(key):
+    """A 32x32 random image per TEXTS key: equal keys are pixel copies
+    (Hamming 0), distinct keys are ~32 bits apart."""
+    rng = np.random.RandomState(sorted(TEXTS).index(key) + 1)
+    return bytearray(encode_png(rng.randint(0, 200, size=(32, 32)).astype(np.uint8)))
+
+
+# The sinks on the shared near-dup ingest skeleton: (start, source DDL,
+# payload of a TEXTS key).
+SINKS = {
+    "text_minhash": (stream_dedup_ingest, "doc_id long, text string", TEXTS.get),
+    "image_phash": (
+        partial(stream_image_dedup_ingest, id_col="doc_id"),
+        "doc_id long, payload binary",
+        _png,
+    ),
+    "text_containment": (stream_text_containment_ingest, "doc_id long, text string", TEXTS.get),
+}
+
+
+def _feed(spark, sink, src, rows):
+    _, ddl, payload = SINKS[sink]
+    rows = [(i, payload(key)) for i, key in rows]
+    spark.createDataFrame(rows, ddl).coalesce(1).write.mode("append").parquet(src)
+
+
+def _run_once(spark, src, corpus, index, ckpt, sink="text_minhash"):
+    start, ddl, _ = SINKS[sink]
+    q = start(
+        spark.readStream.schema(ddl).parquet(src),
         corpus,
         index,
         ckpt,
@@ -110,8 +147,10 @@ def _drop_newest_commit(ckpt):
         os.remove(crc)
 
 
-def test_watermark_crash_replay_converges(spark, tmp_path):
-    """Replay convergence at every crash point past the corpus append.
+@pytest.mark.parametrize("sink", list(SINKS))
+def test_watermark_crash_replay_converges(spark, tmp_path, sink):
+    """Replay convergence at every crash point past the corpus append,
+    for each sink on the shared near-dup ingest skeleton.
 
     (a) crash after full commit → replay is a batch_id no-op;
     (b) crash between corpus append and watermark write → full
@@ -123,12 +162,12 @@ def test_watermark_crash_replay_converges(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     wm_path = corpus + ".__ingest_watermark"
 
-    _docs(spark, [(1, TEXTS["a"]), (2, TEXTS["b"])]).coalesce(1).write.mode("append").parquet(src)
-    _run_once(spark, src, corpus, index, ckpt)
+    _feed(spark, sink, src, [(1, "a"), (2, "b")])
+    _run_once(spark, src, corpus, index, ckpt, sink)
     wm1 = json.load(open(wm_path))
     # batch 1: 11 dups corpus doc 1, 12 unique
-    _docs(spark, [(11, TEXTS["a"]), (12, TEXTS["c"])]).coalesce(1).write.mode("append").parquet(src)
-    _run_once(spark, src, corpus, index, ckpt)
+    _feed(spark, sink, src, [(11, "a"), (12, "c")])
+    _run_once(spark, src, corpus, index, ckpt, sink)
     want = [1, 2, 12]
     assert _corpus_ids(spark, corpus) == want
     wm2 = json.load(open(wm_path))
@@ -137,7 +176,7 @@ def test_watermark_crash_replay_converges(spark, tmp_path):
     # (a) lost commit marker only: batch 1 replays, wm says it fully
     # committed (batch_id match) → pure no-op
     _drop_newest_commit(ckpt)
-    _run_once(spark, src, corpus, index, ckpt)
+    _run_once(spark, src, corpus, index, ckpt, sink)
     assert _corpus_ids(spark, corpus) == want
     assert json.load(open(wm_path)) == wm2
 
@@ -147,7 +186,7 @@ def test_watermark_crash_replay_converges(spark, tmp_path):
     _drop_newest_commit(ckpt)
     with open(wm_path, "w") as f:
         json.dump(wm1, f)
-    _run_once(spark, src, corpus, index, ckpt)
+    _run_once(spark, src, corpus, index, ckpt, sink)
     assert _corpus_ids(spark, corpus) == want  # no dup rows, no lost rows
     assert json.load(open(wm_path))["max_id"] == 12
 

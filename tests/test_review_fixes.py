@@ -73,3 +73,29 @@ def test_driver_memory_override_warns_when_context_exists(spark, monkeypatch):
         and "SPARK_GRAFT_DRIVER_MEMORY" in str(x.message)
         for x in w
     )
+
+
+@pytest.mark.parametrize("x", [float("nan"), float("inf"), float("-inf")])
+def test_dlit_rejects_non_finite(x):
+    """``repr(nan) + 'D'`` is ``nanD``, which Spark parses as a column
+    name and fails on without naming the value: refuse it up front."""
+    from dataflow_python_etl_spark.functions.vectors import dlit
+
+    with pytest.raises(ValueError, match=repr(x)):
+        dlit(x)
+
+
+def test_in_longs_rejects_none_and_non_integral_ids(spark):
+    """``int(3.7)`` would silently probe id 3 (the wrong IVF cell);
+    None and non-integral ids raise a ValueError naming the id, while
+    integral ids, numpy ints included, render as before."""
+    import numpy as np
+
+    from dataflow_python_etl_spark.operators.similarity import _in_longs
+
+    for bad in (None, 3.7):
+        with pytest.raises(ValueError, match=repr(bad)):
+            _in_longs("cid", [1, bad])
+    df = spark.range(6).withColumnRenamed("id", "cid")
+    got = df.where(_in_longs("cid", [1, np.int64(3), np.int32(5)]))
+    assert [r["cid"] for r in got.orderBy("cid").collect()] == [1, 3, 5]

@@ -8,10 +8,10 @@ round-trips / eager materializations: a query whose steady-state
 wall is flat across SFs is overhead-bound, and the job count says
 where the overhead lives.
 
-Optionally dumps ``explain("formatted")`` to plans/r12/<name>_<tag>.txt.
+Optionally dumps ``explain("formatted")`` to <DIR>/<name>.txt.
 
 Usage:
-    python tools/profile_query.py [--plans TAG] [--runs N] q163_ann_recall ...
+    python tools/profile_query.py [--plans DIR] [--runs N] q163_ann_recall ...
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--plans", default=None, help="dump explain to plans/r12/<name>_<TAG>.txt")
+    ap.add_argument("--plans", default=None, help="dump explain to DIR/<name>.txt")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
@@ -50,18 +50,18 @@ def main() -> None:
 
     from dataflow_python_etl_spark.operators.dedup import unpersist_all
 
-    plans_dir = Path(__file__).resolve().parent.parent / "plans" / "r12"
     for name in args.names:
         fn = QUERIES[name].fn
         # warm-up run (untimed: codegen javac + memoized index builds)
         fn(spark, args.sf_dir).count()
         unpersist_all()
         if args.plans:
+            plans_dir = Path(args.plans)
             plans_dir.mkdir(parents=True, exist_ok=True)
             from dataflow_python_etl_spark.plans.checks import explain_str
 
             df = fn(spark, args.sf_dir)
-            (plans_dir / f"{name}_{args.plans}.txt").write_text(explain_str(df))
+            (plans_dir / f"{name}.txt").write_text(explain_str(df))
             unpersist_all()
         walls, jobs = [], []
         for i in range(args.runs):
